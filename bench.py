@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract + BASELINE.md targets T1-T4).
 
-Runs every registered ``queries()`` key at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+Runs every registered ``queries()`` key at ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 test data) on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's
+core count, ``session.cpu_count()``) and prints ONE JSON line::
 
     {"metric": "full_suite_wall", "value": <total sec>, "unit": "sec",
      "queries": {"<key>": sec, ...}, "sf": 0.1}
@@ -23,14 +23,13 @@ import sys
 import time
 
 # Contention-demotion bounds (round-11 ADVICE: hoisted from inline
-# literals so re-calibration is a one-line, greppable change — and
-# env-overridable like SPARK_GRAFT_SOLO so a host/probe change doesn't
-# require an edit). Calibrated to THIS host + the 2M-iteration probe in
+# literals so re-calibration is a one-line, greppable change).
+# Calibrated to THIS host + the 2M-iteration probe in
 # _calibrate(): every recorded solo median sits at 118.3-134.9 ms even
 # across the ±15% host-state swing, every recorded contended median at
 # 157.8-165.1 ms. Re-derive both if the probe workload or host changes.
-CAL_CONTENDED_ABS_MS = float(os.environ.get("SPARK_GRAFT_CAL_ABS_MS", "145.0"))
-CAL_CONTENDED_RATIO = float(os.environ.get("SPARK_GRAFT_CAL_RATIO", "1.2"))
+CAL_CONTENDED_ABS_MS = 145.0
+CAL_CONTENDED_RATIO = 1.2
 # Relative floor for the ratio trigger (round-17 ADVICE): the fixed
 # 145 ms AND-guard was derived on the pre-r17 host (solo 118-135 ms);
 # the r17 host reads 96-113 ms solo, so a sibling arriving mid-run can
@@ -42,7 +41,7 @@ CAL_CONTENDED_RATIO = float(os.environ.get("SPARK_GRAFT_CAL_RATIO", "1.2"))
 # that row's wall was +18% over the clean cold row (256 s vs 217 s), so
 # whatever inflated the probe (sibling or all-core throttle) inflated
 # the suite too — "solo" would have been the wrong label for it.
-CAL_ABS_REL_FLOOR = float(os.environ.get("SPARK_GRAFT_CAL_REL_FLOOR", "1.25"))
+CAL_ABS_REL_FLOOR = 1.25
 # Idle-guard band (round-16 VERDICT task 2): every recorded solo median
 # sits at 118.3-134.9 ms, every contended one at 157.8-165.1 ms — 140 ms
 # splits the gap below the demotion bound. The guard WAITS for the host
@@ -50,9 +49,9 @@ CAL_ABS_REL_FLOOR = float(os.environ.get("SPARK_GRAFT_CAL_REL_FLOOR", "1.25"))
 # contention source is the host's burstable-CPU credit throttle after
 # our own back-to-back runs (~26% inflation, recovers in ~15 min idle) —
 # so a committed row is clean by construction, not by footnote.
-CAL_NOMINAL_MS = float(os.environ.get("SPARK_GRAFT_CAL_NOMINAL_MS", "140.0"))
-IDLE_WAIT_MAX_S = float(os.environ.get("SPARK_GRAFT_IDLE_WAIT_MAX_S", "900"))
-IDLE_POLL_S = float(os.environ.get("SPARK_GRAFT_IDLE_POLL_S", "60"))
+CAL_NOMINAL_MS = 140.0
+IDLE_WAIT_MAX_S = 900.0
+IDLE_POLL_S = 60.0
 # Loadavg band for the idle guard (round-17 VERDICT task 3): the r17
 # committed row was tagged solo:false purely because the 1-min loadavg
 # at start read 6.02 — the exponentially-damped residue of a prior run
@@ -63,7 +62,7 @@ IDLE_POLL_S = float(os.environ.get("SPARK_GRAFT_IDLE_POLL_S", "60"))
 # 1-min loadavg decays with a ~60 s time constant, so draining 6 -> 1
 # costs ~2 min of the 900 s budget; a GENUINE sibling holds the value
 # up and the run starts (budget-bounded) with the honest demotion below.
-IDLE_LOAD_MAX = float(os.environ.get("SPARK_GRAFT_IDLE_LOAD_MAX", "1.0"))
+IDLE_LOAD_MAX = 1.0
 # All-core/single-thread calibration ratio bound (round-18 VERDICT task
 # 1a): an ALL-CORE throttle (burstable-CPU credit exhaustion, a
 # bandwidth-hungry sibling) inflates the 32-thread suite while leaving
@@ -72,9 +71,7 @@ IDLE_LOAD_MAX = float(os.environ.get("SPARK_GRAFT_IDLE_LOAD_MAX", "1.0"))
 # Healthy recorded band on this host is 1.15-1.3 (SMT + all-core
 # clocks); above the bound on EITHER end of the run, the row is not a
 # comparable solo measurement and an inferred tag must demote.
-CAL_ALLCORE_RATIO_MAX = float(
-    os.environ.get("SPARK_GRAFT_CAL_ALLCORE_RATIO", "1.3")
-)
+CAL_ALLCORE_RATIO_MAX = 1.3
 
 
 def _cal_unit_ms(_=None) -> float:
@@ -314,7 +311,9 @@ def demote_if_contended(
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from yc_data_proc_metadata_import_spark.session import cpu_count, get_spark
+
+    cpus = cpu_count()
     # Solo-vs-concurrent provenance (round-8 VERDICT item 4): the round-8
     # recorded wall was 19% above the same code's solo runs because bench
     # sometimes ran beside the full-registry rehearsal. Tag every row so
@@ -419,8 +418,6 @@ def main() -> int:
         )
 
     _n_warm = _count_warm_fixtures()
-
-    from yc_data_proc_metadata_import_spark.session import get_spark
 
     spark = get_spark(
         app_name="engine-bench", master=f"local[{cpus}]", shuffle_partitions=cpus

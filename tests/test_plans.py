@@ -712,16 +712,3 @@ def test_pq_luts_single_projection(spark, sf_dir):
     )
     scans = sum(1 for n in nodes if n.startswith("Scan"))
     assert scans == 1, f"expected exactly 1 scan, found {scans}: {nodes}"
-
-
-def test_mad_bucket_selection_matches_window_path(spark, sf_dir, monkeypatch):
-    """The MAD selection dispatch (r19): forcing the bucket-selection
-    path (threshold 0) must produce row-identical results to the
-    default window path — the two are the same order statistic by the
-    monotone-bucketing argument in the operator docstring."""
-    from yc_data_proc_metadata_import_spark.operators import aggregates as A
-
-    base = A.agg_median_absolute_deviation(spark, sf_dir).collect()
-    monkeypatch.setattr(A, "_MAD_BUCKET_SELECT_MIN", 0)
-    forced = A.agg_median_absolute_deviation(spark, sf_dir).collect()
-    assert sorted(map(tuple, base)) == sorted(map(tuple, forced))

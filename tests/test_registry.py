@@ -423,11 +423,37 @@ def test_stream_state_partitions_sizing():
     # below the 256 MB/partition target -> the floor, bench-identical.
     assert _state_partitions(sp, 2 * 1024**2) == 8
     assert _state_partitions(sp, 200 * 1024**2) == 8
-    # volume term takes over beyond the rung tiers on any core count.
+    # volume term takes over beyond the rung tiers on any core count,
+    # capped at 4x parallelism (1 TB would otherwise plan 4096).
     assert _state_partitions(sp, 10 * 1024**3) == 10 * 1024**3 // _STATE_TARGET_BYTES == 40
+    assert _state_partitions(sp, 1024**4) == 128
     # python-state keys (compute-bound): ~1 partition/MB, floor for
     # tiny inputs (sf0.1 events 2 MB -> 8, no local regression), capped
     # at 4x parallelism so scale doesn't fragment worker batches.
     assert _state_partitions(sp, 2 * 1024**2, python_state=True) == 8
     assert _state_partitions(sp, 20 * 1024**2, python_state=True) == 20
     assert _state_partitions(sp, 100 * 1024**3, python_state=True) == 128
+
+
+def test_env_knob_inventory():
+    """The package reads exactly these SPARK_GRAFT_* env names; a new
+    one needs a caller that sets it and a line here saying why."""
+    import pathlib
+    import re
+
+    reasons = {
+        "SPARK_GRAFT_CPUS": "local[N] cores of the session get_spark builds",
+        "SPARK_GRAFT_DRIVER_MEM": "driver heap of the session get_spark builds",
+        "SPARK_GRAFT_IVF_NPROBE": "IVF probe width, scaled by the sf10 rung preset",
+        "SPARK_GRAFT_KM_K": "k-means list count, scaled by the sf10 rung preset",
+    }
+    pkg = pathlib.Path(engine.__file__).parent
+    found = {
+        m
+        for f in pkg.rglob("*.py")
+        for m in re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read_text())
+    }
+    assert found == set(reasons), (
+        f"unlisted: {sorted(found - set(reasons))}, "
+        f"gone: {sorted(set(reasons) - found)}"
+    )

@@ -119,31 +119,6 @@ def test_multi_assigned_clamps_r_past_k(spark, sf_dir):
     assert len(lit) == n_vecs * len(cents) and n_vecs > 0
 
 
-def test_ivf_nassign_env_pair_consistency(spark, sf_dir, oracle):
-    """The documented contract: a process overriding SPARK_GRAFT_IVF_NASSIGN
-    gets a CONSISTENT engine+oracle pair (round-16 ADVICE — the oracle
-    used to hardcode rn = 1). Pin both settings: classic nassign=1 and
-    the default multi-assignment nassign=2 must each hash-match the
-    oracle SQL rebuilt from the same constant."""
-    from tests.compare import assert_match
-
-    import yc_data_proc_metadata_import_spark as engine
-
-    q = engine.queries()["llm_ann_ivf"]
-    orig = sim._IVF_NASSIGN
-    try:
-        for nassign in (1, 2):
-            sim._IVF_NASSIGN = nassign
-            assert_match(
-                q(spark, sf_dir),
-                oracle,
-                sim._ivf_oracle_sql(),
-                f"llm_ann_ivf[nassign={nassign}]",
-            )
-    finally:
-        sim._IVF_NASSIGN = orig
-
-
 def test_pq_shortlist_rerank_recall_floor(spark, sf_dir):
     """The two-stage PQ contract: the L=50 ADC shortlist + exact re-rank
     must recover well over half the exact top-5 even on this fixture's

@@ -8,7 +8,7 @@ vocabulary, and the `c<i> ` copy prefixes chain them together).  A
 1-cluster ground truth only adjudicates "everything connected": a
 trivially over-merging engine would pass it.  This fixture is the
 counter-case, mirroring the round-15 IVF hard-fixture precedent
-(tools/ivf_hard_sweep.py — seeded, generated, documented):
+(IVF_HARD_SWEEP.json — seeded, generated, documented):
 
 - FAMILIES distinct base documents, each 30 tokens drawn from a
   pool-sized synthetic vocabulary (`w<j>`) — family vocabularies

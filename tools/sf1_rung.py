@@ -60,9 +60,6 @@ too often):
       SPARK_GRAFT_SF1_OUT=.scratch/sf100 SPARK_GRAFT_SF1_COPIES=1000 \
           SPARK_GRAFT_SF1_TABLES=region,nation,customer,supplier,part,orders,lineitem,events \
           SPARK_GRAFT_SF1_CHUNK=50 python tools/make_sf1.py
-  sf100_docs (documents only, for tools/labels_5m_profile.py):
-      SPARK_GRAFT_SF1_OUT=.scratch/sf100_docs SPARK_GRAFT_SF1_COPIES=1000 \
-          SPARK_GRAFT_SF1_TABLES=documents python tools/make_sf1.py
   hard 2M-doc corpus (for the label fixpoint + truth analysis):
       python tools/make_hard_docs.py .scratch/hard_docs_2m_r17 200000 10
 

@@ -30,8 +30,6 @@ recompute exact Jaccard/Hamming, which llm_dedup_ngram cross-validates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -423,7 +421,7 @@ _BLOCK_BITS = 15  # 4 blocks x 15 bits cover the 60-bit fingerprint
 # >=1 shared (sub_id, sub_key) sub-bucket and the existing star-edge
 # propagation unions the sub-components. 16384^2 popcounts ~ 0.3 s
 # vectorized: sub-second tasks, and sf<=0.1 buckets never hit the cap.
-_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_BUCKET_CAP", "16384"))
+_BUCKET_CAP = 16384
 _SUB_CHUNKS = 20  # 3-bit chunks over the 60-bit fingerprint
 _CHUNKS_PER_BLOCK = 5  # block j covers chunks 5j..5j+4
 

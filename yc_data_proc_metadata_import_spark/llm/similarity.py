@@ -19,7 +19,7 @@ the vector half of an LLM training-data pipeline.
   generation when even blocked matmul is too much; verify stage is exact.
 - llm_ann_ivf: IVF over a TRAINED codebook — centroids come from
   llm_kmeans_cluster's Lloyd iterations (one update step over the final
-  assignment), every vector is assigned to its nearest centroid
+  assignment), every vector is assigned to its 2 nearest centroids
   (driver-literal codebook, map-only), queries probe the 3 nearest
   lists. The classic recall/cost dial at billion-vector scale.
 
@@ -69,18 +69,15 @@ import os as _os
 # built at import from the SAME constants, so a process that sets the
 # env gets a consistent engine+oracle pair either way.
 _IVF_NPROBE = int(_os.environ.get("SPARK_GRAFT_IVF_NPROBE", "3"))
-# Lists each CORPUS vector is replicated into (multi-assignment): >1
-# trades r x index storage for recall that nprobe alone cannot buy when
+# Lists each CORPUS vector is replicated into (multi-assignment): 2
+# trades 2x index storage for recall that nprobe alone cannot buy when
 # the loss is assignment-stage — the query's true neighbor was assigned
 # to a list the probe ranking never reaches (measured: the hard-mode
-# 0.98 plateau at nassign=1; recall 1.0 at nassign=2 nprobe=1,
-# IVF_HARD_SWEEP.json). DEFAULT 2 (round-16 VERDICT task 4): the
-# registry key ships the multi-assignment path and the oracle replays
-# the top-r assignment bit-exactly (_ivf_oracle_sql interpolates
-# ``rn <= _IVF_NASSIGN`` + DISTINCT hits — round-16 ADVICE), so the
-# driver hash-adjudicates the nassign=2 index end-to-end. Set the env
-# to 1 for classic IVF; engine and oracle stay consistent either way.
-_IVF_NASSIGN = int(_os.environ.get("SPARK_GRAFT_IVF_NASSIGN", "2"))
+# 0.98 plateau at one list per vector; recall 1.0 at 2 lists and
+# nprobe=1, IVF_HARD_SWEEP.json). The oracle replays the top-2
+# assignment bit-exactly (_ivf_oracle_sql interpolates
+# ``rn <= _IVF_NASSIGN`` + DISTINCT hits).
+_IVF_NASSIGN = 2
 
 
 def _dot(a, b) -> F.Column:
@@ -1202,12 +1199,9 @@ def _ivf_oracle_sql() -> str:
         "MIN(n.n) AS n FROM ufin u JOIN nfin n ON n.cluster = u.cluster "
         "GROUP BY u.cluster)",
         f"v AS ({_VECS_SQL})",
-        # assign replays the engine's (multi-)assignment: each vector's
+        # assign replays the engine's multi-assignment: each vector's
         # _IVF_NASSIGN cheapest lists in (cost, j) order — rn <= r is the
-        # ROW_NUMBER spelling of _km_multi_assigned's top-r, and at the
-        # classic r=1 it degenerates to the argmin (round-16 ADVICE: the
-        # oracle interpolates the SAME constant the engine reads, so an
-        # env override keeps the pair consistent).
+        # ROW_NUMBER spelling of _km_multi_assigned's top-r.
         "assign AS (SELECT vec_id, j AS list_id FROM ("
         "SELECT q.vec_id, c.j, ROW_NUMBER() OVER (PARTITION BY q.vec_id "
         f"ORDER BY {cost}, c.j) AS rn FROM q CROSS JOIN cfin c) "
@@ -1216,12 +1210,11 @@ def _ivf_oracle_sql() -> str:
         "SELECT q.vec_id, c.j, ROW_NUMBER() OVER (PARTITION BY q.vec_id "
         f"ORDER BY {cost}, c.j) AS rn FROM q CROSS JOIN cfin c "
         f"WHERE q.vec_id < {_N_QUERIES}) WHERE rn <= {_IVF_NPROBE})",
-        # DISTINCT mirrors the engine's dropDuplicates at nassign > 1: a
-        # neighbor replicated into two probed lists appears twice with an
+        # DISTINCT mirrors the engine's dropDuplicates: a neighbor
+        # replicated into two probed lists appears twice with an
         # identical deterministic cosine.
-        "hits AS (SELECT "
-        + ("DISTINCT " if _IVF_NASSIGN > 1 else "")
-        + "p.query_id, a.vec_id AS neighbor_id, "
+        "hits AS (SELECT DISTINCT "
+        "p.query_id, a.vec_id AS neighbor_id, "
         + _DOT_SQL.format(a="vq.emb", b="va.emb")
         + " / (vq.norm * va.norm) AS cosine "
         "FROM probes p JOIN assign a ON p.list_id = a.list_id "
@@ -1249,7 +1242,7 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     update step over llm_kmeans_cluster's final Lloyd assignment (the
     "final centroids" a trainer ships — round-12 VERDICT task 4;
     previously a modulo-sampled stand-in), every vector is assigned to
-    its _IVF_NASSIGN cheapest lists (multi-assignment, default 2 —
+    its _IVF_NASSIGN cheapest lists (multi-assignment —
     round-16 VERDICT: the r x storage buys back assignment-stage recall
     that probing cannot, measured recall 1.0 at nprobe=1 on the hard
     corpus), queries probe the nprobe cheapest lists, exact cosine ranks
@@ -1273,27 +1266,14 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vecs(spark, sf_dir)
     assigned = _km_fit(spark, sf_dir)  # (vec_id, qv, cluster)
     cents, max_abs_qv = _ivf_codebook(spark, sf_dir)
-    # Inverted lists: argmin-cost assignment against the trained
-    # codebook (literal expression at registry K, Arrow-batched GEMM at
-    # scaled K — _km_assigned) — map-only scan, then attach emb/norm.
-    # At _IVF_NASSIGN > 1 each vector lands in its r cheapest lists
-    # (multi-assignment — r x storage buys back assignment-stage recall
-    # the probe count cannot; the duplicate (query, neighbor) hits two
-    # shared lists produce are collapsed before ranking).
-    if _IVF_NASSIGN > 1:
-        inv = _km_multi_assigned(
-            assigned.select("vec_id", "qv"), spark, cents, max_abs_qv,
-            _IVF_NASSIGN,
-        ).join(v, "vec_id")
-    else:
-        inv = (
-            _km_assigned(
-                assigned.select("vec_id", "qv"), spark, cents, max_abs_qv,
-                out="list_id",
-            )
-            .select("vec_id", "list_id")
-            .join(v, "vec_id")
-        )
+    # Inverted lists: each vector lands in its _IVF_NASSIGN cheapest
+    # lists of the trained codebook (literal expression at registry K,
+    # Arrow-batched GEMM at scaled K — _km_multi_assigned) — map-only
+    # scan, then attach emb/norm. The duplicate (query, neighbor) hits
+    # two shared lists produce are collapsed before ranking.
+    inv = _km_multi_assigned(
+        assigned.select("vec_id", "qv"), spark, cents, max_abs_qv, _IVF_NASSIGN
+    ).join(v, "vec_id")
     # Probe plan: each query's nprobe cheapest lists (_km_probe_lists —
     # the same ranking machinery at r=nprobe) — 10 query rows either way.
     probes = _km_probe_lists(
@@ -1315,10 +1295,9 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), scos.alias("cosine"))
     )
-    if _IVF_NASSIGN > 1:
-        # a neighbor replicated into two probed lists appears twice with
-        # an identical (deterministic) cosine — collapse before ranking
-        hits = hits.dropDuplicates(["query_id", "neighbor_id"])
+    # a neighbor replicated into two probed lists appears twice with an
+    # identical (deterministic) cosine — collapse before ranking
+    hits = hits.dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         hits.withColumn("rnk", F.row_number().over(w))

@@ -10,8 +10,6 @@ both engines, so even stddev/corr match bit-for-bit.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1134,23 +1132,6 @@ def agg_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# MAD selection dispatch (see the docstring below): histogram row count
-# above which the median selection switches from the per-group
-# cumulative window (single-task sort per group — cheapest while the
-# histogram fits one task comfortably; measured faster to 594 k rows)
-# to two-level bucket selection (every sort bucket-bounded). Module
-# level + env-overridable so tests can force the bucket path and a
-# deployment can tune the crossover.
-_MAD_BUCKET_SELECT_MIN = int(
-    _os.environ.get("SPARK_GRAFT_MAD_BUCKET_MIN", str(2_000_000))
-)
-# Bucket width for the bucket-selection path: values here span
-# ~[0, 105 k] (prices and absolute deviations), so 64.0 yields ~1.6 k
-# buckets per group — small enough for the bucket walk, wide enough
-# that one bucket holds a few hundred rows.
-_MAD_BUCKET_WIDTH = 64.0
-
-
 @query(
     "agg_median_absolute_deviation",
     oracle="""
@@ -1210,65 +1191,19 @@ def agg_median_absolute_deviation(spark: SparkSession, sf_dir: str) -> DataFrame
     the old second scan produced, therefore identical medians).  The
     price histogram materializes once (localCheckpoint — it is the
     artifact both medians select from) and lineitem is scanned exactly
-    once.
-
-    SELECTION DISPATCH (round-19, guide §2.5): the cumulative window is
-    a per-group SINGLE-TASK sort of the whole histogram.  Below
-    _MAD_BUCKET_SELECT_MIN histogram rows that sort is cheaper than any
-    alternative (same-session A/B at sf0.1's 594 k rows: window 2.0-2.5 s
-    vs bucket path 2.8-3.0 s warm — the extra stages cost more than the
-    sort).  Beyond it the single-task sort is the straggler, and the
-    selection switches to TWO-LEVEL BUCKET SELECTION: bucket the values
-    (floor(v/W) — division by a positive constant then floor is
-    monotone, so bucket order == value order and equal values share a
-    bucket), take per-(group, bucket) weighted counts with one parallel
-    map-side aggregate, walk the cumulative BUCKET counts to find the
-    bucket containing rank k and the residual rank kk within it, then
-    sort only THAT bucket's rows.  The selected value is identical by
-    construction: sorted-by-value == sorted-by-(bucket, value), so the
-    global k-th weighted value is the kk-th weighted value of the
-    target bucket, kk = k − (weight before the bucket).  Every sort in
-    that plan is bucket-count- or bucket-content-bounded — the shape
-    that survives 100 TB, where the whole-domain per-group sort cannot
-    (the dispatch-on-materialized-size pattern _propagate_min_labels'
-    union-find exit established)."""
+    once."""
     li = load(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
 
-    def hist_median(hist: DataFrame, val: str, out: str, n_hist: int) -> DataFrame:
+    def hist_median(hist: DataFrame, val: str, out: str) -> DataFrame:
         """(group, median value) from a (group, value, cnt) histogram —
-        exact weighted lower median; selection strategy per the
-        docstring's dispatch."""
-        wall = Window.partitionBy("l_returnflag")
+        exact weighted lower median by a cumulative-count window."""
         k = F.expr("(n + 1) div 2")
-        if n_hist <= _MAD_BUCKET_SELECT_MIN:
-            wcum = Window.partitionBy("l_returnflag").orderBy(val)
-            h = hist.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
-                "n", F.sum("cnt").over(wall)
-            )
-            return h.where(
-                (F.col("cum") - F.col("cnt") < k) & (k <= F.col("cum"))
-            ).select("l_returnflag", F.col(val).alias(out))
-        b = hist.withColumn(
-            "bkt", F.floor(F.col(val) / _MAD_BUCKET_WIDTH).cast("long")
+        wcum = Window.partitionBy("l_returnflag").orderBy(val)
+        h = hist.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
+            "n", F.sum("cnt").over(Window.partitionBy("l_returnflag"))
         )
-        bcnt = b.groupBy("l_returnflag", "bkt").agg(F.sum("cnt").alias("bc"))
-        wb = Window.partitionBy("l_returnflag").orderBy("bkt")
-        bc = bcnt.withColumn("bcum", F.sum("bc").over(wb)).withColumn(
-            "n", F.sum("bc").over(wall)
-        )
-        target = bc.where(
-            (F.col("bcum") - F.col("bc") < k) & (k <= F.col("bcum"))
-        ).select(
-            "l_returnflag",
-            "bkt",
-            (k - (F.col("bcum") - F.col("bc"))).alias("kk"),
-        )
-        tb = b.join(F.broadcast(target), ["l_returnflag", "bkt"])
-        wv = Window.partitionBy("l_returnflag").orderBy(val)
-        h = tb.withColumn("cum", F.sum("cnt").over(wv))
         return h.where(
-            (F.col("cum") - F.col("cnt") < F.col("kk"))
-            & (F.col("kk") <= F.col("cum"))
+            (F.col("cum") - F.col("cnt") < k) & (k <= F.col("cum"))
         ).select("l_returnflag", F.col(val).alias(out))
 
     # The ONLY fact scan: per-group value histogram, materialized once
@@ -1279,20 +1214,14 @@ def agg_median_absolute_deviation(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
     )
-    # Count over the MATERIALIZED rows (cheap — no recomputation) drives
-    # the selection dispatch above.
-    n_hist = hist.count()
     # The 3-row med relation is referenced twice (deviation re-key +
     # result join); localCheckpoint materializes it once so the
     # histogram+window subtree isn't re-executed per reference.
-    med = hist_median(
-        hist, "l_extendedprice", "median_price", n_hist
-    ).localCheckpoint()
+    med = hist_median(hist, "l_extendedprice", "median_price").localCheckpoint()
     # Deviation histogram = the price histogram re-keyed by |v - median|
     # with counts summed: exactly the (group, d) multiset of the old
     # per-row pass (same IEEE subtraction, applied once per distinct
-    # value instead of once per row). Its row count is <= n_hist (the
-    # re-key only merges), so the same dispatch decision applies.
+    # value instead of once per row).
     dev_hist = (
         hist.join(med, "l_returnflag")
         .groupBy(
@@ -1301,7 +1230,7 @@ def agg_median_absolute_deviation(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .agg(F.sum("cnt").alias("cnt"))
     )
-    return hist_median(dev_hist, "d", "mad", n_hist).join(
+    return hist_median(dev_hist, "d", "mad").join(
         med, "l_returnflag"
     ).select("l_returnflag", "median_price", "mad")
 

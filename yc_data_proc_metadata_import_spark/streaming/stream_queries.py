@@ -196,21 +196,17 @@ def _read_stream(spark: SparkSession, path: str, **options) -> DataFrame:
 # state-store instance pays a fixed commit + maintenance cost per
 # micro-batch, so partitions should be few when the update volume is
 # small (the measured 2.4x local win of 8 vs 32) and grow with input
-# volume, not with whatever core count the session happens to have —
-# at 256 MB/partition a 1 TB/day key plans ~4k state partitions on any
-# cluster size, while every rung tier (sf0.1 events 2 MB, sf1 20 MB,
+# volume, not with whatever core count the session happens to have,
+# up to 4x parallelism (more state instances than a few per worker slot
+# only add commit cost). Every rung tier (sf0.1 events 2 MB, sf1 20 MB,
 # sf10 200 MB) stays at the floor, keeping the bench comparable by
-# construction. Env-overridable for production tuning.
-_STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STATE_TARGET_BYTES", str(256 * 1024 * 1024))
-)
+# construction.
+_STATE_TARGET_BYTES = 256 * 1024 * 1024
 # Python arbitrary-state operators parallelize per-group PYTHON compute,
 # so their partition count scales much earlier: ~1 partition per MB of
 # source (sf1-swept: 20 MB -> 20 partitions lands in the measured-best
-# 16-32 band), capped at 4x parallelism.
-_PY_STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PY_STATE_TARGET_BYTES", str(1024 * 1024))
-)
+# 16-32 band).
+_PY_STATE_TARGET_BYTES = 1024 * 1024
 
 
 def _dir_bytes(path: str) -> int:
@@ -232,9 +228,10 @@ def _state_partitions(
     join) keep one state-store instance per shuffle partition, each
     paying a commit + maintenance cost per micro-batch — so their
     partitioning should track expected UPDATE RATE, not scan width. The
-    count is max(cores/4 floor 8, source bytes / _STATE_TARGET_BYTES):
-    the floor keeps the per-batch fixed cost low, and the volume term
-    scales the state layout with the data on any cluster size. Measured
+    count is max(cores/4 floor 8, min(source bytes / _STATE_TARGET_BYTES,
+    4 x cores)): the floor keeps the per-batch fixed cost low, and the
+    volume term scales the state layout with the data, capped at 4x
+    parallelism like the Python-state keys below. Measured
     at sf0.1 AND the sf1 rung (same-session sweeps over {4,8,16,32},
     OPTIMIZATION_r19.md): windowed aggs degrade ~2x at 32 partitions at
     BOTH tiers (stream_tumbling 1.28 vs 2.0 s at sf1, stream_watermark
@@ -255,9 +252,8 @@ def _state_partitions(
     """
     cores = spark.sparkContext.defaultParallelism
     floor = max(8, cores // 4)
-    if python_state:
-        return max(floor, min(src_bytes // _PY_STATE_TARGET_BYTES, 4 * cores))
-    return max(floor, src_bytes // _STATE_TARGET_BYTES)
+    target = _PY_STATE_TARGET_BYTES if python_state else _STATE_TARGET_BYTES
+    return max(floor, min(src_bytes // target, 4 * cores))
 
 
 def _run_to_memory(
